@@ -79,17 +79,62 @@ _SLOW_TESTS = {
 }
 
 
+def named_node_ids(args, invocation_dir) -> set[tuple[Path, str]]:
+    """(absolute file, in-file part) of every ``path::name`` argument."""
+    named = set()
+    for arg in args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            named.add((Path(invocation_dir, path).resolve(), rest))
+    return named
+
+
+def is_named(path: Path, part: str, named: set[tuple[Path, str]]) -> bool:
+    """Whether a test (file, in-file node id) was named on the command
+    line: itself, its parametrization family, or its class."""
+    return any(
+        path == p and (part == r or part.startswith((r + "[", r + "::")))
+        for p, r in named
+    )
+
+
+def collects_full_suite(config) -> bool:
+    """Whether the run collects every test under ``tests/``, unfiltered."""
+    here = Path(__file__).resolve().parent
+    dirs = [
+        Path(config.invocation_params.dir, a.partition("::")[0]).resolve()
+        for a in config.args
+    ]
+    filtered = any(
+        getattr(config.option, opt, None)
+        for opt in ("keyword", "markexpr", "deselect", "ignore", "ignore_glob", "lf")
+    )
+    return not filtered and any(d == here or d in here.parents for d in dirs)
+
+
 def pytest_collection_modifyitems(config, items):
     slow = pytest.mark.slow
+    matched = set()
     for item in items:
         key = (item.fspath.basename, item.name.split("[")[0])
         if key in _SLOW_TESTS:
             item.add_marker(slow)
+            matched.add(key)
+    # roster entries that matched no collected test, when the run collects
+    # every test (else None); tests/test_slow_roster.py fails on any
+    config.unmatched_slow_tests = (
+        sorted(_SLOW_TESTS - matched) if collects_full_suite(config) else None
+    )
     if os.environ.get("WSP_FULL_TESTS"):
         return
+    # a slow test named by node id runs: naming it is asking for it
+    named = named_node_ids(config.args, config.invocation_params.dir)
     selected, deselected = [], []
     for item in items:
-        (deselected if "slow" in item.keywords else selected).append(item)
+        keep = "slow" not in item.keywords or is_named(
+            item.path, item.nodeid.partition("::")[2], named
+        )
+        (selected if keep else deselected).append(item)
     if deselected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected

@@ -73,3 +73,20 @@ def test_degradation_sheds_metadata_before_walls_and_is_bounded() -> None:
     # metadata shed first; whatever queries remain are honest about drops
     if set(parsed.get("queries", {})) != set(names):
         assert parsed.get("q_dropped", 0) > 0
+
+
+def test_last_ditch_sheds_the_map_with_its_annotations() -> None:
+    # a budget that the contract keys plus an EMPTY map still overflow,
+    # but the contract keys alone fit: the last-ditch branch runs, and the
+    # drop count and rounding note must leave with the map they describe
+    names = list(HEADLINE)
+    contract = json.dumps(
+        {"metric": "headline_queries_total_wall", "value": 123.456, "unit": "sec", "sf": 0.1},
+        separators=(",", ":"),
+    )
+    budget = len(contract) + len(',"queries":{}') - 1
+    line = compact_bench_line(_detail(names), max_line=budget)
+    assert len(line) <= budget
+    parsed = json.loads(line)
+    assert "queries" not in parsed
+    assert "q_dropped" not in parsed and "q_1dp" not in parsed

@@ -42,6 +42,8 @@ ALLOWLIST: dict[tuple[str, str, str], int] = {
     ('operators/dedup.py', 'bloom_filter_decontam', 'collect'): 1,
     ('operators/evals.py', 'v_optimal_histogram', 'collect'): 1,
     ('operators/labeling.py', 'bradley_terry_strengths', 'collect'): 1,
+    # the M-step confusion counts: R x |cats|^2 rows at any corpus size
+    ('operators/labeling.py', 'dawid_skene_correction', 'collect'): 1,
     ('operators/similarity.py', 'ann_pq_topk', 'collect'): 1,
     ('operators/similarity.py', 'embedding_near_dup_broadcast', 'collect'): 1,
     ('operators/similarity.py', 'embedding_procrustes_drift', 'collect'): 2,

@@ -1148,16 +1148,17 @@ def _ds_votes_sql() -> str:
         "is relabeled by the maximum-a-posteriori class under "
         "prior(t) * prod_r P_r(obs_r | t) (the E-step) — the standard "
         "upgrade from majority vote when annotators have unequal "
-        "reliability. Plan: the confusion matrix is a hash aggregate on "
-        "the (annotator, consensus, observed) domain (bounded: R x "
-        "|cats|^2), votes PIVOT to one row per doc (R is a compile-time "
-        "constant, so the pivot is R conditional aggregates — no "
-        "explode-rejoin), candidates cross a |cats|-row frame, and the "
-        "three confusion lookups are broadcast-size equi-joins. The "
-        "per-(doc, candidate) score is a FIXED-ORDER product of four "
-        "exactly-derived doubles (no aggregation over floats), so the "
-        "argmax — a row_number over the |cats| rows within each doc — "
-        "is cross-engine deterministic. The hashed score ships as "
+        "reliability. Plan: one row per doc carries its R votes and its "
+        "consensus (R is a compile-time constant); the confusion counts "
+        "are one hash aggregate on the (annotator, consensus, observed) "
+        "domain, bounded at R x |cats|^2 rows and collected to the "
+        "driver, which derives the probabilities, priors and candidates; "
+        "the E-step is then a narrow projection of the per-doc row, each "
+        "confusion lookup a literal CASE. The per-(doc, candidate) score "
+        "is a FIXED-ORDER product of four exactly-derived doubles (no "
+        "aggregation over floats), so the argmax — the min of "
+        "(-score_e9, t) over the |cats| candidates of each doc — is "
+        "cross-engine deterministic. The hashed score ships as "
         "FLOOR(score * 1e9) BIGINT (r8 ULP audit: ROUND(score, 9) sat "
         "exactly on a half-grid tie; floor of the shared IEEE double "
         "has no rounding-mode dependence), and the argmax ranks by the "
@@ -1166,105 +1167,103 @@ def _ds_votes_sql() -> str:
     tags=("labeling", "llm", "statistics"),
 )
 def dawid_skene_correction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    ann = docs.select(
+    # doc_id is the key of `documents` (unique in every generated fixture:
+    # 500/500 at sf0.001 and sf0.01, 5000/5000 at sf0.1; the replicas of
+    # tools/scale_probe offset it per copy), so one row per doc carries
+    # all R votes. Null ids never meet the SQL form's equi-join on doc_id.
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
+    obs = []
+    for r in range(_N_ANN):
+        hsh = (
+            F.shiftright(((F.col("doc_id") * 31 + r) % _MOD) * F.lit(_KNUTH), 16)
+            % _FLIP_MOD
+        )
+        obs.append(F.when(hsh == 0, F.lit("noise")).otherwise(F.col("lang")).alias(f"o{r}"))
+    n_noise = sum(F.when(F.col(f"o{r}") == "noise", 1).otherwise(0) for r in range(_N_ANN))
+    rows = docs.select("doc_id", "lang", *obs).select(
         "doc_id",
-        "lang",
-        F.explode(F.array(*[F.lit(r) for r in range(_N_ANN)])).alias("r"),
+        *[f"o{r}" for r in range(_N_ANN)],
+        F.when(n_noise >= (_N_ANN // 2) + 1, F.lit("noise"))
+        .otherwise(F.col("lang"))
+        .alias("consensus"),
     )
-    hsh = (
-        F.shiftright(((F.col("doc_id") * 31 + F.col("r")) % _MOD) * F.lit(_KNUTH), 16)
-        % _FLIP_MOD
+    votes = rows.select(
+        "consensus",
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(r).alias("r"), F.col(f"o{r}").alias("obs"))
+                    for r in range(_N_ANN)
+                ]
+            )
+        ),
     )
-    votes = ann.select(
+    # M-step: the confusion counts, one row per (annotator, consensus,
+    # observed) — bounded by construction at R x |cats|^2 rows (3 x 6^2
+    # here), whatever the corpus size, so it is pulled to the driver whole
+    cnt = {
+        (r, t, o): n
+        for r, t, o, n in votes.groupBy("r", "consensus", "obs").count().collect()
+    }
+    tot: dict = {}
+    for (r, t, _), n in cnt.items():
+        tot[(r, t)] = tot.get((r, t), 0) + n
+    ct = {t: n for (r, t), n in tot.items() if r == 0}  # one r = 0 vote per doc
+    nd = sum(ct.values())
+    # a candidate is an observed label that is also some doc's consensus
+    # (it needs a prior); a null label never is
+    cands = sorted({o for _, _, o in cnt} & set(ct) - {None})
+    if not cands:
+        return spark.createDataFrame([], _DS_SCHEMA)
+    # E-step: per doc and candidate t, the fixed-order product
+    # pp * p0 * p1 * p2 with each factor a literal CASE lookup on the doc's
+    # vote (a missing cell is 0.0), from the same IEEE divisions the SQL
+    # form makes (cnt * 1.0 / SUM(cnt) per (r, t); ct * 1.0 / nd); the
+    # argmax by (score_e9 DESC, t ASC) is the min of (-score_e9, t). Built
+    # as SQL text: one parse instead of a py4j call per literal, and
+    # repr() + D is a double literal that parses back to the same double.
+
+    def lookup(r: int, t: str) -> str:
+        cells = sorted(
+            (o, n * 1.0 / tot[(r, t)])
+            for (rr, tt, o), n in cnt.items()
+            if (rr, tt) == (r, t) and o is not None
+        )
+        whens = "".join(f" WHEN {_sql_str(o)} THEN {p!r}D" for o, p in cells)
+        return f"CASE o{r}{whens} ELSE 0.0D END" if cells else "0.0D"
+
+    picks = []
+    for t in cands:
+        score = " * ".join([f"{ct[t] * 1.0 / nd!r}D"] + [lookup(r, t) for r in range(_N_ANN)])
+        picks.append(
+            f"named_struct('neg_e9', -CAST(FLOOR({score} * 1000000000.0D) AS BIGINT),"
+            f" 't', {_sql_str(t)})"
+        )
+    return rows.select(
+        "doc_id", "consensus", F.expr(f"array_min(array({', '.join(picks)}))").alias("best")
+    ).selectExpr(
         "doc_id",
-        "r",
-        F.when(hsh == 0, F.lit("noise")).otherwise(F.col("lang")).alias("obs"),
+        "consensus",
+        "best.t AS ds_label",
+        "-best.neg_e9 AS score_e9",
+        "CASE WHEN best.t <> consensus THEN 1 ELSE 0 END AS changed",
     )
-    majority = (_N_ANN // 2) + 1
-    from weather_stream_processor_spark.plans.caching import persisted_result
 
-    def build(votes_c: DataFrame) -> DataFrame:
-        # consensus derives from the PERSISTED votes so its consumers
-        # never re-execute the vote explode — but the votes persist alone
-        # left the DOCS scan + join + groupBy inside cons, and cons feeds
-        # FOUR subtrees (confusion matrix, n_docs, priors, final join),
-        # so the corpus scan physically executed four times (r11 phase
-        # profile: build 2.22 s, exec 0.03). cons is (doc_id, consensus)
-        # — two narrow columns per doc, the cuttable class (guide §2.4);
-        # lineage-cutting it runs the scan+join+agg once. A/B sf0.1
-        # min-of-2: 2.02 → 1.35 s, output collected and compared equal.
-        from weather_stream_processor_spark.plans.caching import truncate_lineage
 
-        cons = truncate_lineage(
-            votes_c.join(docs.select("doc_id", "lang"), "doc_id")
-            .groupBy("doc_id")
-            .agg(
-                F.when(
-                    F.sum((F.col("obs") == "noise").cast("int")) >= majority,
-                    F.lit("noise"),
-                )
-                .otherwise(F.any_value("lang"))
-                .alias("consensus")
-            )
-        )
-        conf = (
-            votes_c.join(cons, "doc_id")
-            .groupBy("r", F.col("consensus").alias("t"), "obs")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        )
-        w_rt = Window.partitionBy("r", "t")  # |cats|-row partitions
-        conf_p = conf.select(
-            "r", "t", "obs", (F.col("cnt") * F.lit(1.0) / F.sum("cnt").over(w_rt)).alias("p")
-        )
-        n_docs = cons.agg(F.count(F.lit(1)).alias("nd"))  # 1-row frame
-        prior = (
-            cons.groupBy(F.col("consensus").alias("t"))
-            .agg(F.count(F.lit(1)).alias("ct"))
-            .crossJoin(F.broadcast(n_docs))
-            .select("t", (F.col("ct") * F.lit(1.0) / F.col("nd")).alias("pp"))
-        )
-        pivot = votes_c.groupBy("doc_id").agg(
-            *[
-                F.max(F.when(F.col("r") == r, F.col("obs"))).alias(f"o{r}")
-                for r in range(_N_ANN)
-            ]
-        )
-        cand = votes_c.select(F.col("obs").alias("t")).distinct()
-        scores = pivot.crossJoin(F.broadcast(cand)).join(
-            F.broadcast(prior), "t"
-        )
-        for r in range(_N_ANN):
-            cp = conf_p.filter(F.col("r") == r).select(
-                F.col("t").alias("t"),
-                F.col("obs").alias(f"o{r}"),
-                F.col("p").alias(f"p{r}"),
-            )
-            scores = scores.join(F.broadcast(cp), ["t", f"o{r}"], "left")
-        score = F.col("pp")
-        for r in range(_N_ANN):
-            score = score * F.coalesce(F.col(f"p{r}"), F.lit(0.0))
-        w_doc = Window.partitionBy("doc_id").orderBy(
-            F.desc("score_e9"), F.asc("t")
-        )  # |cats| rows per doc
-        pick = (
-            scores.select(
-                "doc_id",
-                "t",
-                F.floor(score * 1e9).cast("bigint").alias("score_e9"),
-            )
-            .withColumn("rn", F.row_number().over(w_doc))
-            .filter(F.col("rn") == 1)
-        )
-        return pick.join(cons, "doc_id").select(
-            "doc_id",
-            "consensus",
-            F.col("t").alias("ds_label"),
-            "score_e9",
-            F.when(F.col("t") != F.col("consensus"), 1).otherwise(0).alias("changed"),
-        )
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    return persisted_result(votes, build)
+
+_DS_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("consensus", StringType()),
+        StructField("ds_label", StringType()),
+        StructField("score_e9", LongType()),
+        StructField("changed", IntegerType()),
+    ]
+)
 
 
 # ---------------------------------------------------------------------------

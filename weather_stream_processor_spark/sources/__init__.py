@@ -12,6 +12,7 @@ from weather_stream_processor_spark.sources.tables import (
     ensure_session_defaults,
     load_table,
     load_tables,
+    parquet_schema,
     spread,
 )
 
@@ -20,6 +21,7 @@ __all__ = [
     "ensure_session_defaults",
     "load_table",
     "load_tables",
+    "parquet_schema",
     "read_csv",
     "read_jsonl",
     "read_orc",

@@ -5,7 +5,8 @@ At 100 TB these tables would be date-partitioned (``l_shipdate`` /
 (see ``docs/SCALE.md``); the loaders keep a single call site so that swap
 is one change. Scans stay declarative (``spark.read.parquet``) so Catalyst
 performs column pruning and predicate pushdown into the parquet reader —
-never pre-``collect`` or pre-cache here.
+never pre-``collect`` or pre-cache here. Only the inferred schema is
+memoized (``parquet_schema``), so a repeated load runs no Spark job.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import os
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -56,20 +58,68 @@ def ensure_session_defaults(spark: SparkSession) -> None:
     """
     if spark in _DEFAULTED_SESSIONS:
         return
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    for conf, value in _PINNED_CONFS.items():
+        spark.conf.set(conf, value)
     _DEFAULTED_SESSIONS.add(spark)
 
 
+# each changes the schema a parquet footer infers to, so each is also part
+# of the schema memo's key
+_PINNED_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 _DEFAULTED_SESSIONS: weakref.WeakSet = weakref.WeakSet()
+
+# absolute path -> (key, schema): one entry per path, replaced when the
+# key changes, so the memo is bounded by the number of tables read
+_SCHEMA_MEMO: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_stats(path: str) -> tuple:
+    """``(mtime_ns, size)`` of a file, or of every file under a directory
+    table (by relative path): rewriting, touching, adding or removing any
+    part file changes it."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    stats = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            stats.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+    return tuple(stats)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoized.
+
+    Inference is one Spark job per read (footer sampling); the schema is
+    footer METADATA, a function of the files and of the pinned confs, so
+    the memo is keyed on both: the files' ``(mtime_ns, size)`` and the
+    confs' values, read at call time. A session whose confs were changed
+    after they were pinned re-infers instead of being served a schema
+    inferred under other confs.
+    """
+    path = os.path.abspath(path)
+    key = (_file_stats(path), tuple(spark.conf.get(c) for c in _PINNED_CONFS))
+    hit = _SCHEMA_MEMO.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMA_MEMO[path] = (key, schema)
+    return schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_session_defaults(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         # `ts` is TIMESTAMP(NANOS) in the fixture parquet; with
         # spark.sql.legacy.parquet.nanosAsLong it arrives as epoch-nanos
